@@ -88,7 +88,7 @@ class Watermark:
     """Cursor view consumed by predicate builders. ``manual_override`` wins
     over stored state per reference precedence (:199-217)."""
 
-    last_timestamp: Any = None   # str 'YYYY-MM-DD HH:MM:SS' | datetime | None
+    last_timestamp: Any = None   # str 'YYYY-MM-DD HH:MM:SS[.ffffff]' | datetime | None
     last_id: int | None = None
 
     @classmethod
@@ -248,10 +248,14 @@ def extract_watermark(df: DataFrame, cfg: CDCConfig) -> Watermark:
 
 def _fmt_ts(v) -> str | None:
     """Normalize to ``YYYY-MM-DD HH:MM:SS`` (reference F7 normalization,
-    row_based.py:228-246 / base.py:778-796)."""
+    row_based.py:228-246 / base.py:778-796), keeping ``.ffffff`` when the
+    value has microseconds: a cursor floored to the second would re-select
+    every version in its last second on the next sync."""
     if v is None:
         return None
     if hasattr(v, "strftime"):
+        if getattr(v, "microsecond", 0):
+            return v.strftime("%Y-%m-%d %H:%M:%S.%f")
         return v.strftime("%Y-%m-%d %H:%M:%S")
     return str(v)
 

@@ -10,10 +10,9 @@ set operations:
   entries where the reference's in-memory set would not; a broadcast hint
   keeps it shuffle-free while the manifest is small.
 - union-dedup = ``union().distinct()`` (U1)
-- difference  = ``left_anti`` (U2)
 
-For data-level idempotency (not just file-level) we add
-``exclude_processed_rows``: filter on ``input_file_name()``.
+Idempotency is file-level, as in the reference: the sync plan collects the
+unloaded subset of its staging listing and reads exactly those files.
 """
 
 from __future__ import annotations
@@ -42,44 +41,19 @@ def union_dedup(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).distinct()
 
 
-def set_difference(a: DataFrame, b: DataFrame, on: str) -> DataFrame:
-    """U2: a - b on key (reference discovered-minus-processed)."""
-    return a.join(b.select(on).distinct(), on=on, how="left_anti")
-
-
-def exclude_processed_rows(df: DataFrame, processed_paths: list[str]) -> DataFrame:
-    """Row-level idempotent read: drop rows originating from already-loaded
-    files, resolved at scan time via ``input_file_name()``."""
-    if not processed_paths:
-        return df
-    return df.filter(~F.input_file_name().isin(processed_paths))
-
-
-def discover_parquet_files(spark: SparkSession, path: str) -> DataFrame:
-    """S14 file discovery (reference :377-543 paginated list_objects_v2) —
-    one distributed metadata read; newest-first trim (O4) is an orderBy."""
-    df = spark.read.parquet(path)
-    return (df.select(F.input_file_name().alias("path"))
-              .distinct())
-
-
-def norm_file_col(col: F.Column) -> F.Column:
-    """Normalize ``input_file_name()`` URIs to plain paths so they join
-    against driver-listed paths (local scheme only; S3 keys pass through)."""
-    return F.regexp_replace(col, "^file:(//)?", "")
-
-
 class ParquetManifest:
     """Processed-file manifest as a parquet table — the 100 TB replacement
     for the reference's JSON-array blacklist inside the watermark document
     (simple_watermark_manager.py:186-249).
 
-    At millions of staged files the JSON doc and its driver-side set both
+    At millions of loaded files the JSON doc and its driver-side set both
     explode; here membership is an anti-join against a parquet table and
-    recording is an append of a path DataFrame — no path list is ever
-    collect()ed to the driver. The v2.0 watermark doc keeps only counts
-    (metadata), not the file array. Stored under a ``_``-prefixed
-    directory so data reads of the staging root never see it."""
+    recording is an append of a path DataFrame, so the manifest itself is
+    never collected. The driver holds only what the sync plan lists: the
+    staging inventory and the unloaded subset ``exclude_loaded`` returns.
+    The v2.0 watermark doc keeps only counts (metadata), not the file
+    array. Stored under a ``_``-prefixed directory so data reads of the
+    staging root never see it."""
 
     SCHEMA = "path string, loaded_at timestamp"
 

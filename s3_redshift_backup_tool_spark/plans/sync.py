@@ -15,15 +15,18 @@ Spark re-design: one declarative plan per table —
                                                      # SAME pass, no
                                                      # second scan
                  -> write.partitionBy(date keys)     # staging (F11)
-    load: discovered staged files  -anti-join->  manifest blacklist (P5)
-          -> append/overwrite target               (K2/K3)
+    load: staging listing  -anti-join->  manifest blacklist (P5)
+          -> read exactly the unloaded files -> append/overwrite target
+                                                   (K2/K3)
     verify: target count vs cumulative watermark   (A7)
 
 The chunk loop, sparse-stop heuristic, memory manager and retry ladder
 (R6-R8) disappear: Spark's task scheduler, AQE and task retries supply
 them. At 100 TB the staging write is the only shuffle-free wide stage
 (partitionBy hash-distributes by date key); everything upstream is a
-narrow scan->filter->project pipeline inside WholeStageCodegen.
+narrow scan->filter->project pipeline inside WholeStageCodegen. The
+driver holds the staging listing and its unloaded subset; the manifest
+stays a parquet table and is never collected.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ from __future__ import annotations
 import os
 import re
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -41,7 +45,7 @@ from ..operators import cdc as cdc_ops
 from ..operators.align import align_to_schema
 from ..operators.cdc import Watermark
 from ..operators.column_mapper import apply_column_map
-from ..operators.manifest import ParquetManifest, files_df, norm_file_col
+from ..operators.manifest import ParquetManifest, files_df
 from ..operators.quality import QualityReport, run_quality_gate
 from ..state import WatermarkStore
 from .pipeline import PipelineConfig, TableConfig
@@ -84,15 +88,6 @@ def add_date_partitions(df: DataFrame, ts_col: str | None,
     for g in granularity:
         df = df.withColumn(g, DATE_PART_EXPRS[g](c))
     return df
-
-
-def ensure_parallelism(df: DataFrame, min_partitions: int) -> DataFrame:
-    """See :func:`..operators.partitioning.fan_out` (kept under the old
-    name for callers of the sync plan). Unnecessary when the plan already
-    repartitions by output partition columns — one shuffle covers both
-    parallelism and layout."""
-    from ..operators.partitioning import fan_out
-    return fan_out(df, min_partitions)
 
 
 def staging_partitions(df: DataFrame, floor_parts: int,
@@ -141,13 +136,15 @@ def _staged_files(spark: SparkSession, staging_path: str) -> list[str]:
     the listing as a job past ``parallelPartitionDiscovery.threshold``),
     so on an object store this is batched LIST calls, not a per-directory
     Python walk — the round-3 verdict's scale fix over the old recursive
-    driver glob. Paths are scheme-normalized so they compare equal to the
-    manifest's stored plain paths."""
+    driver glob. ``inputFiles()`` returns URIs; they are scheme-stripped
+    and percent-decoded into the plain paths the manifest stores and the
+    load reads back by name (a partition value such as ``REG AIR`` comes
+    back as ``REG%20AIR``, which no reader finds)."""
     try:
         files = spark.read.parquet(staging_path).inputFiles()
     except AnalysisException:   # path missing, or present but no parquet
         return []
-    return sorted(re.sub(r"^file:(//)?", "", f) for f in files)
+    return sorted(unquote(re.sub(r"^file:(//)?", "", f)) for f in files)
 
 
 def _staging_may_have_leftovers(doc: dict) -> bool:
@@ -187,19 +184,18 @@ def _load_reconciled(spark: SparkSession, df: DataFrame, target_path: str,
 
 def _load_stage(spark: SparkSession, *, staging_path: str, target_path: str,
                 manifest: ParquetManifest, gen_cols: list[str],
-                id_col: str | None, session_files: list[str],
+                id_col: str | None, staged_files: list[str],
+                session_files: list[str],
                 replace: bool = False) -> tuple[int, int]:
-    """Stage 2: staged files minus manifest -> target, fully distributed.
+    """Stage 2: staged files minus manifest -> target.
 
-    The reference collects the discovery listing and subtracts an
-    in-memory blacklist (gemini_redshift_loader.py:499-527); at millions
-    of staged files both the watermark JSON doc and the driver set become
-    the bottleneck. Here exclusion happens where the data is: staged rows
-    are tagged with ``input_file_name()`` and anti-joined against the
-    parquet manifest — no path list is ever materialized on the driver
-    (paths cross the driver only as counts). Returns
+    As in the reference (gemini_redshift_loader.py:499-527), the load
+    subtracts the processed-file blacklist from the discovery listing and
+    reads exactly the files left. ``staged_files`` is the caller's
+    listing; the driver holds it and its unloaded subset, while the
+    manifest stays a parquet table the subtraction anti-joins against
+    (the watermark doc keeps counts only). Returns
     (files_loaded, files_skipped)."""
-    staged_files = _staged_files(spark, staging_path)
     if not staged_files:
         return 0, 0
 
@@ -211,28 +207,23 @@ def _load_stage(spark: SparkSession, *, staging_path: str, target_path: str,
         manifest.record(files_df(spark, staged_files))
         return len(staged_files), 0
 
-    # paths-only accounting job (counts cross the driver, not lists)
-    to_load_paths = manifest.exclude_loaded(files_df(spark, staged_files))
-    n_to_load = to_load_paths.count()
-    skipped = len(staged_files) - n_to_load
-    if n_to_load == 0:
+    to_load = [r.path for r in
+               manifest.exclude_loaded(files_df(spark, staged_files)).collect()]
+    skipped = len(staged_files) - len(to_load)
+    if not to_load:
         return 0, skipped
 
-    rows = (spark.read.parquet(staging_path)
-            .withColumn("__src_file", norm_file_col(F.input_file_name())))
-    rows = rows.join(manifest.paths_df().withColumnRenamed("path", "__src_file"),
-                     "__src_file", "left_anti") \
-               .drop("__src_file", *gen_cols)
-
-    n_leftovers = n_to_load - len(session_files)
-    if n_leftovers > 0:
+    # basePath keeps the Hive partition columns of the file-list read
+    rows = spark.read.option("basePath", staging_path).parquet(*to_load) \
+        .drop(*gen_cols)
+    if len(to_load) > len(session_files):
         # stranded files from a crashed run may be half-loaded:
         # reconcile by key so resume is exactly-once (rare path)
         _load_reconciled(spark, rows, target_path, id_col)
     else:
         rows.write.mode("append").parquet(target_path)
-    manifest.record(to_load_paths)
-    return n_to_load, skipped
+    manifest.record(files_df(spark, to_load))
+    return len(to_load), skipped
 
 
 def sync_table(
@@ -345,6 +336,7 @@ def sync_table(
                 recovered, _ = _load_stage(
                     spark, staging_path=staging_path, target_path=target_path,
                     manifest=manifest, gen_cols=gen_cols, id_col=id_col,
+                    staged_files=_staged_files(spark, staging_path),
                     session_files=[])
                 store.update_load_state(source_name, table, target_scope,
                                         n_files=recovered, status="success")
@@ -420,13 +412,13 @@ def sync_table(
         # this session's: files a crashed prior run staged (or even
         # loaded) but never recorded are picked up here, exactly like the
         # reference's extraction-independent loader (:377-543). The
-        # exclusion is an anti-join against the parquet manifest — no
-        # file list is collect()ed (round-1 verdict scale fix).
+        # post-write listing above serves as that discovery.
         store.start_load(source_name, table, target_scope)
         files_loaded, skipped = _load_stage(
             spark, staging_path=staging_path, target_path=target_path,
             manifest=manifest, gen_cols=gen_cols, id_col=id_col,
-            session_files=session_files, replace=replace)
+            staged_files=staged_files, session_files=session_files,
+            replace=replace)
         store.update_load_state(source_name, table, target_scope,
                                 n_files=files_loaded, status="success")
 

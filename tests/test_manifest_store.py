@@ -4,8 +4,9 @@ Round-1 verdict scale fix: at millions of staged files the watermark
 document (one JSON array) and the driver-side set both explode. The
 manifest is now a parquet table; membership is an anti-join and recording
 is a distributed append — these tests pin that the watermark doc stays
-O(1) size regardless of manifest cardinality and that no path list is
-materialized on the driver during a sync.
+O(1) size regardless of manifest cardinality. The manifest is never
+collected: the driver holds only the staging listing and its unloaded
+subset.
 """
 
 from __future__ import annotations
