@@ -22,7 +22,9 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     arithmetic, decode UDFs) should start with this: the shuffled bytes
     are tiny relative to the per-row CPU they unlock. No-op when the
     input already has >= ``min_partitions`` (default: cluster default
-    parallelism) partitions."""
+    parallelism) partitions. Reading the partition count executes the
+    upstream AQE shuffle stages when the input has exchanges, so callers
+    should pass it materialized (e.g. localCheckpoint'd) input."""
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     # JVM-side partition count: df.rdd would build a Python-serialized RDD
     # conversion plan per call; queryExecution().toRdd() is the InternalRow

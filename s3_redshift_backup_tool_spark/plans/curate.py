@@ -29,8 +29,11 @@ expensive-wide:
 
 Every stage is a DataFrame transform from ``operators/``; nothing here
 collects data to the driver. The plan returns per-stage surviving-row
-counts (one count() per stage boundary — at production scale these come
-from the same pass via observe() if the extra actions matter).
+counts. Each counted stage is materialized once: its survivors are
+lazily localCheckpoint'd and the stage's count() is the action that
+fills the checkpoint, so the count adds no job and every later stage
+(and its counts, ``fan_out`` partition probes and the shard write)
+reads the cut lineage instead of re-running the funnel above it.
 """
 
 from __future__ import annotations
@@ -50,6 +53,15 @@ from ..operators.sampling import pack_sequences
 class CurationResult:
     counts: dict[str, int] = field(default_factory=dict)
     out_path: str | None = None
+
+
+def _materialize(res: CurationResult, stage: str,
+                 docs: DataFrame) -> DataFrame:
+    """Cut ``docs``' lineage at a stage boundary and record its count;
+    the count is the action that fills the checkpoint."""
+    docs = docs.localCheckpoint(eager=False)
+    res.counts[stage] = docs.count()
+    return docs
 
 
 def curate_corpus(
@@ -89,13 +101,13 @@ def curate_corpus(
                                 min_words=gopher_min_words)
                   .filter(F.col("gopher_keep")).select(id_col))
         docs = docs.join(keep, id_col, "left_semi")
-        res.counts["rule_gate"] = docs.count()
+        docs = _materialize(res, "rule_gate", docs)
 
     # -- 1. exact dedup ---------------------------------------------------
     canon = dd.exact_dedup(docs, text_col, id_col).select(
         F.col("canonical_id").alias(id_col))
     docs = docs.join(canon, id_col, "left_semi")
-    res.counts["exact_dedup"] = docs.count()
+    docs = _materialize(res, "exact_dedup", docs)
 
     # -- 2. near-dup components -------------------------------------------
     # lsh_max_bucket_size is NON-None by default: the production plan
@@ -111,14 +123,14 @@ def curate_corpus(
     # they ARE the component label (min id = canonical)
     dupes = comp.filter(F.col(id_col) != F.col("component")).select(id_col)
     docs = docs.join(dupes, id_col, "left_anti")
-    res.counts["near_dedup"] = docs.count()
+    docs = _materialize(res, "near_dedup", docs)
 
     # -- 3. quality filter -------------------------------------------------
     rep = tx.repetition_signals(docs, text_col, id_col)
     keep_rep = rep.filter(F.col("repetition_ok")).select(id_col)
     docs = (docs.join(keep_rep, id_col, "left_semi")
                 .filter(tx.quality_score(F.col(text_col)) >= min_quality))
-    res.counts["quality"] = docs.count()
+    docs = _materialize(res, "quality", docs)
 
     # -- 3.5 learned classifier gate (optional): score the surface
     # features under externally-trained logistic weights (train with
@@ -132,7 +144,7 @@ def curate_corpus(
                               classifier_weights, ["f1", "f2", "f3"])
         docs = (scored.filter(F.col("p_quality") >= classifier_min_p)
                       .drop("f1", "f2", "f3", "p_quality"))
-        res.counts["classifier_gate"] = docs.count()
+        docs = _materialize(res, "classifier_gate", docs)
 
     # -- 3.8 DSIR domain-targeted selection (optional): keep docs whose
     # per-token hashed-ngram log-likelihood ratio vs the target domain
@@ -147,7 +159,7 @@ def curate_corpus(
                              >= float(dsir_min_avg_logratio))
                      .select(id_col))
         docs = docs.join(keep_ids, id_col, "left_semi")
-        res.counts["dsir_selected"] = docs.count()
+        docs = _materialize(res, "dsir_selected", docs)
 
     # -- 4. decontamination vs the eval corpus -----------------------------
     if eval_docs is not None:
@@ -159,12 +171,12 @@ def curate_corpus(
             threshold=contamination_threshold)
         contaminated = overlap.filter(F.col("contaminated")).select(id_col)
         docs = docs.join(contaminated, id_col, "left_anti")
-        res.counts["decontaminated"] = docs.count()
+        docs = _materialize(res, "decontaminated", docs)
 
     # -- 5. per-source contribution caps -----------------------------------
     if per_source_cap is not None and source_col is not None:
         docs = tx.stratified_sample(docs, source_col, per_source_cap, id_col)
-        res.counts["source_capped"] = docs.count()
+        docs = _materialize(res, "source_capped", docs)
 
     # -- 5.5 PII redaction (narrow regexp chain; BEFORE packing so token
     # budgets count the text that actually ships) --------------------------
@@ -177,7 +189,7 @@ def curate_corpus(
                             budget=pack_budget, buckets=pack_buckets)
     out = docs.join(packed.select(id_col, "n_tokens", "bucket", "pack_id"),
                     id_col)
-    res.counts["packed"] = out.count()
+    out = _materialize(res, "packed", out)
 
     # -- 7. shard write ------------------------------------------------------
     if out_path is not None:

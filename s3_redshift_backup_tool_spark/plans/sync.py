@@ -114,10 +114,15 @@ def staging_partitions(df: DataFrame, floor_parts: int,
     16 MB default targets ~64 MB in-memory per task, the measured
     no-spill point with headroom. ``cap`` bounds the count in local
     mode (a 100 TB deploy raises it or scales ``target_bytes`` with
-    executor memory); estimates that come back unknown (Long.Max) fall
-    to the cap, never overflow."""
+    executor memory). An unknown estimate (at or above
+    ``spark.sql.defaultSizeInBytes``, Long.Max by default — e.g. an
+    in-memory ``createDataFrame`` source) returns ``floor_parts``: the
+    cap would give a 40-row batch 10,000 write tasks."""
     est = int(df._jdf.queryExecution().optimizedPlan().stats()
               .sizeInBytes())
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if est >= conf.defaultSizeInBytes():
+        return floor_parts
     need = (min(est, cap * target_bytes) + target_bytes - 1) // target_bytes
     return max(floor_parts, min(cap, int(need)))
 

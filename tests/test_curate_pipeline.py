@@ -59,12 +59,15 @@ def test_curate_corpus_end_to_end(spark, documents, tmp_path):
     assert all(r["tot"] < 512 + r["mx"] for r in packs)
     assert c["shards"] == out.select("bucket").distinct().count()
 
-    # determinism: rerun produces the identical doc set
+    # determinism: a rerun on a differently partitioned input keeps the
+    # same survivors at every stage (checkpointed stage outputs must not
+    # depend on the input's partitioning)
     res2 = curate_corpus(
         spark, train_in.repartition(11), eval_docs,
         out_path=None, min_quality=0.2, per_source_cap=50,
         pack_budget=512, pack_buckets=8)
     assert res2.counts["packed"] == c["packed"]
+    assert res2.counts == {k: v for k, v in c.items() if k != "shards"}
 
 
 def test_curate_scrubs_pii_before_packing(spark, tmp_path):
@@ -168,3 +171,67 @@ def test_curate_dsir_stage_targets_domain(spark, documents):
     # enrichment: en share among survivors > en share among input
     res_off = curate_corpus(spark, documents, None, min_quality=0.0)
     assert "dsir_selected" not in res_off.counts
+
+
+def test_curate_runs_each_stage_once(spark, documents, monkeypatch):
+    """Each counted stage is materialized once: a stage count reads the
+    stage's checkpoint (a few jobs), not the whole funnel above it, and
+    every ``fan_out`` inside the plan gets checkpointed input, so its
+    partition-count probe executes no upstream shuffle stage. Every
+    count and ``fan_out`` call runs in its own job group; the groups'
+    job ids are the jobs that call launched."""
+    import itertools
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from s3_redshift_backup_tool_spark.operators import partitioning, text
+
+    sc = spark.sparkContext
+    seq = itertools.count()
+    launched: dict[str, list[int]] = {"count": [], "fan_out": []}
+
+    def grouped(kind, fn):
+        def call(*args, **kwargs):
+            prev = sc.getLocalProperty("spark.jobGroup.id")
+            group = f"curate-once-{kind}-{next(seq)}"
+            sc.setJobGroup(group, kind)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", prev)
+                launched[kind].append(
+                    len(sc.statusTracker().getJobIdsForGroup(group)))
+        return call
+
+    eval_docs = sample_by_hash(documents, "doc_id", 0.05, salt="eval")
+    train_in = documents.join(eval_docs.select("doc_id"), "doc_id",
+                              "left_anti")
+    monkeypatch.setattr(ClassicDataFrame, "count",
+                        grouped("count", ClassicDataFrame.count))
+    fan_out = grouped("fan_out", partitioning.fan_out)
+    for mod in (partitioning, dd, text):
+        monkeypatch.setattr(mod, "fan_out", fan_out)
+
+    res = curate_corpus(
+        spark, train_in, eval_docs,
+        gopher_min_words=5,
+        min_quality=0.2,
+        classifier_weights=[1.0, 0.0, 0.0, 0.0],
+        classifier_min_p=0.5,
+        dsir_target=F.col("lang") == "en",
+        dsir_min_avg_logratio=-1e9,
+        dsir_buckets=512,
+        per_source_cap=50,
+        pack_budget=512,
+        pack_buckets=8,
+    )
+    monkeypatch.undo()
+
+    assert {"rule_gate", "exact_dedup", "near_dedup", "quality",
+            "classifier_gate", "dsir_selected", "decontaminated",
+            "source_capped", "packed"} <= res.counts.keys()
+    assert res.counts["packed"] > 0
+    assert len(launched["count"]) >= len(res.counts)
+    assert launched["fan_out"], "no fan_out call was observed"
+    assert max(launched["count"]) <= 3, launched["count"]
+    assert max(launched["fan_out"]) == 0, launched["fan_out"]

@@ -344,8 +344,8 @@ def test_staging_partitions_floor_on_small_batches(spark, orders):
 
 def test_staging_partitions_scales_with_estimate(spark):
     """The count grows with Catalyst's size estimate (~target_bytes per
-    partition) and is clamped at the cap even for unknown (Long.Max)
-    estimates — never overflows, never returns a number above cap."""
+    partition) and is clamped at the cap when the estimate asks for
+    more — never overflows, never returns a number above cap."""
     from s3_redshift_backup_tool_spark.plans.sync import staging_partitions
 
     big = spark.range(0, 10_000_000).selectExpr(
@@ -354,3 +354,14 @@ def test_staging_partitions_scales_with_estimate(spark):
     assert 4 < n <= 10_000
     # cap clamps: a tiny target forces need >> cap
     assert staging_partitions(big, 4, target_bytes=1, cap=7) == 7
+
+
+def test_staging_partitions_unknown_estimate_uses_floor(spark):
+    """An in-memory source has no size estimate (Long.Max): the count is
+    the floor, not the cap, so a 40-row batch gets 4 write tasks, not
+    10,000."""
+    from s3_redshift_backup_tool_spark.plans.sync import staging_partitions
+
+    small = spark.createDataFrame([(i, f"r{i}") for i in range(40)],
+                                  "id long, s string")
+    assert staging_partitions(small, 4) == 4
